@@ -1,7 +1,12 @@
 package graft
 
+import java.lang.reflect.InvocationTargetException
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -16,6 +21,33 @@ object ProfileOne {
                                     runMs: Long, cpuMs: Long,
                                     shufReadMb: Double, shufWriteMb: Double,
                                     inMb: Double)
+
+  private val busFallbackLogged = new AtomicBoolean(false)
+
+  /** Blocks until every listener event posted so far has been delivered.
+    * `SparkContext.listenerBus` is private to Spark, so it is reached by
+    * reflection. Where that path is missing or fails, this says so once on
+    * stderr and waits 300 ms instead. An interrupt during the wait is
+    * passed on: the thread's interrupt flag is set again. */
+  def flushListenerBus(sc: SparkContext): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      val waitUntilEmpty = bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .getOrElse(throw new NoSuchMethodException(
+          s"${bus.getClass.getName}.waitUntilEmpty()"))
+      waitUntilEmpty.invoke(bus)
+    } catch {
+      case e: InvocationTargetException
+          if e.getCause.isInstanceOf[InterruptedException] =>
+        Thread.currentThread().interrupt()
+      case NonFatal(e) =>
+        if (busFallbackLogged.compareAndSet(false, true))
+          System.err.println(s"flushListenerBus: no listener-bus drain ($e); " +
+            "sleeping 300 ms per flush instead")
+        try Thread.sleep(300)
+        catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -61,18 +93,10 @@ object ProfileOne {
       // listener events post asynchronously: flush the bus before clearing
       // (drops the warm run's stragglers) and again before reading (keeps
       // the steady run's late StageCompleted events) — round-16 ADVICE
-      def flushListenerBus(): Unit =
-        try {
-          val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-            .invoke(spark.sparkContext)
-          bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-            .foreach(_.invoke(bus))
-        } catch { case _: Throwable => Thread.sleep(300) }
-      flushListenerBus()
+      flushListenerBus(spark.sparkContext)
       stages.clear()
       val s2 = Timing.timeOnce(df1)
-      flushListenerBus()
+      flushListenerBus(spark.sparkContext)
       val rows = stages.toArray(Array.empty[StageRow]).sortBy(_.id)
       println(f"PROFILE $name run1=${s1.sec}%.2f steady=${s2.sec}%.2f " +
         f"plan1=${(tBuild1 - tBuild0) / 1e9}%.2f plan2=${(tB3 - tB2) / 1e9}%.2f " +

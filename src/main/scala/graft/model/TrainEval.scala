@@ -22,18 +22,30 @@ object TrainEval {
   /** Exact-count split: deterministic hash-shuffled global rank, test set
     * gets exactly ⌈n·testFrac⌉ rows — sklearn `train_test_split` sizes the
     * test set with ceil (reference semantics; identical to floor at the
-    * reference's n=100 but not at e.g. n=123). The global sort is the
-    * price of the exact count — acceptable for train/test sizing, not for
-    * lake-scale ETL (use [[bernoulliSplit]] there). */
+    * reference's n=100 but not at e.g. n=123). Launches no job: the test
+    * size comes from a `count(1) over ()` in the same window as the rank
+    * ([[markTest]]), so `train` and `test` are lazy. Both still run one
+    * global single-partition window — the price of the exact count,
+    * acceptable at model-training scale, where labeled data is the small
+    * end of the lake, not for lake-scale ETL (use [[bernoulliSplit]]). */
   def exactSplit(df: DataFrame, idCol: String, testFrac: Double,
                  seed: Long): (DataFrame, DataFrame) = {
-    val n = df.count()
-    val nTest = math.ceil(n * testFrac).toLong
-    val ranked = df.withColumn("__rnk",
-      row_number().over(Window.orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))))
-    val test = ranked.where(col("__rnk") <= nTest).drop("__rnk")
-    val train = ranked.where(col("__rnk") > nTest).drop("__rnk")
-    (train, test)
+    val marked = markTest(df, idCol, testFrac, seed)
+    (marked.where(!col(TestCol)).drop(TestCol),
+      marked.where(col(TestCol)).drop(TestCol))
+  }
+
+  /** The boolean column [[markTest]] adds. */
+  val TestCol = "__test"
+
+  /** `df` in [[exactSplit]]'s rank order with [[TestCol]] true on its
+    * test rows, so one frame can serve both sides of the split. */
+  def markTest(df: DataFrame, idCol: String, testFrac: Double,
+               seed: Long): DataFrame = {
+    val rank = row_number()
+      .over(Window.orderBy(xxhash64(col(idCol), lit(seed)), col(idCol)))
+    val nTest = ceil(count(lit(1)).over() * testFrac)
+    df.withColumn(TestCol, rank <= nTest)
   }
 
   /** Bernoulli split — approximate fractions, zero shuffle, scale path. */
@@ -46,23 +58,25 @@ object TrainEval {
     new VectorAssembler().setInputCols(featureCols.toArray)
       .setOutputCol("features").transform(df)
 
-  /** Seeded random forest fit, mirroring the reference's
-    * `RandomForestClassifier(n_estimators=100, random_state=42)` with
-    * sklearn's defaults (gini, sqrt feature subsetting). */
-  def trainRF(train: DataFrame, featureCols: Seq[String], labelCol: String,
-              numTrees: Int = 100, seed: Long = 42): RandomForestClassificationModel =
+  /** Seeded random forest fit on an [[assemble]]d frame, mirroring the
+    * reference's `RandomForestClassifier(n_estimators=100,
+    * random_state=42)` with sklearn's defaults (gini, sqrt feature
+    * subsetting). A label column carrying `NominalAttribute` metadata
+    * saves the fit its label-max job. */
+  def trainRF(train: DataFrame, labelCol: String, numTrees: Int = 100,
+              seed: Long = 42): RandomForestClassificationModel =
     new RandomForestClassifier()
       .setNumTrees(numTrees)
       .setSeed(seed)
       .setLabelCol(labelCol)
       .setFeaturesCol("features")
       .setFeatureSubsetStrategy("sqrt")
-      .fit(assemble(train, featureCols))
+      .fit(train)
 
-  /** Batch inference: appends `prediction`. */
-  def predict(model: RandomForestClassificationModel, test: DataFrame,
-              featureCols: Seq[String]): DataFrame =
-    model.transform(assemble(test, featureCols))
+  /** Batch inference over an [[assemble]]d frame: appends `prediction`. */
+  def predict(model: RandomForestClassificationModel,
+              test: DataFrame): DataFrame =
+    model.transform(test)
 
   /** Accuracy as a 1-row DataFrame — mean(actual == predicted), the
     * reference's `accuracy_score` (R10). */

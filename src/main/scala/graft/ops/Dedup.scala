@@ -1603,6 +1603,10 @@ object Dedup {
     * [[labels]] then replays steps 1-3 of the one-shot assignment over
     * the accumulated relations — O(increment), never O(corpus).
     *
+    * Lifetime: a frame returned by [[labels]] reads the state pins of the
+    * step that preceded it, and the next `step` frees those pins. Evaluate
+    * (or copy) it before the next `step`; after that call it is invalid.
+    *
     * State shape at 100 TB: all four frames are O(increment) and
     * localCheckpoint-pinned each step (bounded lineage across an
     * unbounded stream); in production they ARE the per-day signature/
@@ -1681,7 +1685,11 @@ object Dedup {
     /** The assignment for every document seen so far — steps 1-3 of
       * [[incrementalAssign]] over the accumulated relations: batch-
       * internal connected components, component label = min member
-      * anchor, else the component minimum. */
+      * anchor, else the component minimum.
+      *
+      * The returned frame is lazy over the current state pins, so it is
+      * valid only until the next `step`: that call frees the pins it
+      * reads. Evaluate, collect or write it first. */
     def labels(): DataFrame = synchronized {
       require(ids.nonEmpty, "no micro-batch ingested yet")
       val idsDf = ids.get

@@ -191,7 +191,4 @@ object FeatureStore {
         .partitionBy(partCol)
         .saveAsTable(table)
     }
-
-  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
 }

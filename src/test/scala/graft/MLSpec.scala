@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.datagen.SyntheticFeatures
@@ -54,6 +58,47 @@ class SyntheticFeaturesSpec extends SparkSpec {
 }
 
 class PipelineSpec extends SparkSpec {
+
+  /** (jobs, tasks) that `body` launches from this thread: its jobs carry a
+    * fresh local-property tag, and the bus is drained before reading. */
+  private def jobsAndTasks(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.spec.job", java.util.UUID.randomUUID().toString)
+    val (jobs, tasks) = (new AtomicInteger, new AtomicInteger)
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      ProfileOne.flushListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, tasks.get)
+  }
+
+  test("pipeline job budget: one pinned frame, one partition at n = 100") {
+    val out = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val (jobs, tasks) = jobsAndTasks(Pipeline.run(spark, out, n = 100, numTrees = 10))
+    info(s"$jobs jobs, $tasks tasks")
+    assert(jobs <= 16, s"$jobs jobs")
+    assert(tasks <= 40, s"$tasks tasks")
+  }
+
+  test("exactSplit launches no job") {
+    val df = SyntheticFeatures.generate(spark, 100)
+    val (jobs, _) = jobsAndTasks(TrainEval.exactSplit(df, "row_id", 0.2, 42))
+    assert(jobs === 0)
+  }
 
   test("end-to-end reference pipeline: exact split, high accuracy, artifacts") {
     val out = java.nio.file.Files.createTempDirectory("graft-pipeline").toString

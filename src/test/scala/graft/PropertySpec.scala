@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -52,15 +54,21 @@ object GraftProps extends Properties("graft") {
     }
   }
 
-  // exact split: exact test count, disjoint, conserving
+  // exact split: exact test count, disjoint, conserving, and the test
+  // rows are those of the count-then-rank recipe (eager count, then
+  // rank <= ceil(n * frac)) the in-window test size replaced
   property("exactSplit.partitions") = Prop.forAll(
     Gen.choose(1, 120), Gen.choose(1, 99)) { (n, pct) =>
     val frac = pct / 100.0
     val df = spark.range(n.toLong).toDF("row_id")
     val (train, test) = TrainEval.exactSplit(df, "row_id", frac, seed = 7)
     val (nTr, nTe) = (train.count(), test.count())
+    val refTest = df.withColumn("rnk", row_number().over(
+        Window.orderBy(xxhash64(col("row_id"), lit(7L)), col("row_id"))))
+      .where(col("rnk") <= math.ceil(df.count() * frac).toLong)
+    def ids(d: DataFrame) = d.select("row_id").collect().map(_.getLong(0)).toSet
     nTe == math.ceil(n * frac).toLong && nTr + nTe == n &&
-      train.intersect(test).isEmpty
+      train.intersect(test).isEmpty && ids(test) == ids(refTest)
   }
 
   // hashed-shingle Jaccard: j(a,a) == 1 for any ≥3-token text, and the
